@@ -23,8 +23,13 @@ capabilities idiomatically:
   one input partition per (stream, row-range) "read stream", pushed
   filters applied server-side (here: inside the partition reader) as a row
   restriction.  At 100 TB the analogue is a read session fanning out to
-  thousands of ranges; parallelism is the ``partitions`` option, decoupled
-  from file layout.
+  thousands of ranges; parallelism is the ``partitions`` option, or sized
+  by stored bytes when it is unset, decoupled from file layout.  A split
+  reads only the appends that hold its rows.
+
+Both writers encode Arrow batches to JSON lines column by column
+(:func:`_json_chunks`); the lines are the on-disk form the readers, the
+exactly-once sinks and ``FakeBigQuery.read_rows`` share.
 
 Schema travels with the table (``schema.json`` written at commit), mirroring
 the reference's fetch-schema-at-writer-creation behavior
@@ -88,7 +93,12 @@ from ..streaming.sinks import write_with_retry
 from .fake_bigquery import DEFAULT_STREAM, FakeBigQuery, default_stream_name
 
 SOURCE_NAME = "fakebigquery"
-_DEFAULT_READ_PARTITIONS = 8
+_DEFAULT_READ_PARTITIONS = 8  # the most splits a read plans by default
+# Stored bytes per default split.  Each Python read task costs ~0.2 s to
+# launch, so a split must carry enough rows to pay for it: a filtered scan
+# of an 11 MB (100k-row) table on a 4-core machine took 0.74/0.67/0.68/
+# 0.99/1.72 s with 1/2/4/8/16 splits (medians of 5).
+_SPLIT_BYTES = 8 << 20
 _DEFAULT_BATCH_ROWS = 1000
 _ARROW_BATCH_ROWS = 8192
 
@@ -211,12 +221,172 @@ def _coerce(v: Any, dt: DataType) -> Any:
     return v
 
 
-def _json_default(v: Any) -> Any:
-    from pyspark.sql import Row as _Row
+# ---------------------------------------------------------------------------
+# Arrow -> JSON lines: the DSv2 writers' one row encoder
+# ---------------------------------------------------------------------------
+#
+# Each column is rendered to JSON value text with Arrow compute kernels and
+# the rows are joined with ``binary_join_element_wise``; the lines load
+# (``json.loads``) to what ``json.dumps(row, separators=(",", ":"))`` of
+# ``to_pylist()`` gives, which is what these writers stored before:
+#
+# - ints, bools: decimal text, ``true``/``false``;
+# - doubles (float32 widened first): Arrow's shortest round-trip text, with
+#   ``.0`` added to integral fixed-notation values (so they load back as
+#   floats) and the ``NaN``/``Infinity``/``-Infinity`` tokens of
+#   ``json.dumps``.  It equals Python's ``repr`` for 0 and for
+#   1e-4 <= |x| < 1e10; outside that range the notation may differ
+#   (``1e+15`` for ``1000000000000000.0``) for the same value;
+# - strings: JSON-escaped, non-ASCII text as raw UTF-8 (as JVM ``to_json``
+#   writes it), where ``json.dumps`` wrote ``\uXXXX`` escapes;
+# - dates: ``YYYY-MM-DD``; decimals: ``str(Decimal)`` text; both quoted;
+# - timestamps: the quoted ISO text of ``str(datetime)`` in the Arrow
+#   column's zone, ``YYYY-MM-DD HH:MM:SS[.ffffff]+HH:MM`` (the offset
+#   carries the zone, so a reader needs no session zone); timestamp_ntz
+#   has no offset.  This offset-carrying text is the on-disk form;
+# - lists and structs: recursively, ``[a,b]`` and ``{"k":v}``;
+# - any other type (binary, map) goes value by value through ``json.dumps``.
 
-    if isinstance(v, _Row):  # nested struct
-        return v.asDict(recursive=True)
-    return str(v)  # datetime/date/Decimal -> ISO/plain text
+_JSON_CONTROL_ESCAPES = [
+    (chr(c), {8: "\\b", 9: "\\t", 10: "\\n", 12: "\\f", 13: "\\r"}.get(c, f"\\u{c:04x}"))
+    for c in range(0x20)
+]
+
+
+def _quoted(text):
+    import pyarrow.compute as pc
+
+    return pc.binary_join_element_wise('"', text, '"', "")
+
+
+def _json_string_text(col):
+    import pyarrow.compute as pc
+
+    text = pc.replace_substring(pc.replace_substring(col, "\\", "\\\\"), '"', '\\"')
+    if pc.any(pc.match_substring_regex(text, r"[\x00-\x1f]")).as_py():
+        for c, esc in _JSON_CONTROL_ESCAPES:
+            text = pc.replace_substring(text, c, esc)
+    return _quoted(text)
+
+
+def _json_double_text(col):
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    x = col.cast(pa.float64())
+    text = x.cast(pa.string())
+    integral = pc.match_substring_regex(text, r"^-?\d+$")
+    text = pc.if_else(integral, pc.binary_join_element_wise(text, ".0", ""), text)
+    if not pc.all(pc.is_finite(x)).as_py():
+        text = pc.if_else(pc.is_nan(x), "NaN", pc.replace_substring(text, "inf", "Infinity"))
+    return text
+
+
+def _json_timestamp_text(col):
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = col.cast(pa.timestamp("us", col.type.tz))
+    fmt = "%Y-%m-%d %H:%M:%S" + ("%Ez" if col.type.tz else "")
+    # %S prints microseconds; str(datetime) drops an all-zero fraction
+    return _quoted(pc.replace_substring(pc.strftime(col, format=fmt), ".000000", ""))
+
+
+def _json_value_text(col):
+    """JSON text of every value of one Arrow column, ``null`` for nulls."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = col.type
+    if pa.types.is_integer(t) or pa.types.is_boolean(t):
+        text = col.cast(pa.string())
+    elif pa.types.is_floating(t):
+        text = _json_double_text(col)
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        text = _json_string_text(col)
+    elif pa.types.is_timestamp(t):
+        text = _json_timestamp_text(col)
+    elif pa.types.is_date(t):
+        text = _quoted(col.cast(pa.string()))
+    elif pa.types.is_decimal(t):
+        # Arrow writes 1E-18 as "1.E-18"
+        text = _quoted(pc.replace_substring(col.cast(pa.string()), ".E", "E"))
+    elif pa.types.is_list(t) or pa.types.is_large_list(t):
+        items = type(col).from_arrays(col.offsets, _json_value_text(col.values))
+        text = pc.binary_join_element_wise("[", pc.binary_join(items, ","), "]", "")
+        text = pc.if_else(col.is_null(), pa.scalar(None, pa.string()), text)
+    elif pa.types.is_struct(t):
+        fields = [t.field(i).name for i in range(t.num_fields)]
+        obj = _json_object_text(fields, [_json_value_text(c) for c in col.flatten()], len(col))
+        text = pc.if_else(col.is_null(), pa.scalar(None, pa.string()), obj)
+    else:
+        return pa.array(
+            [json.dumps(v, separators=(",", ":"), default=str) for v in col.to_pylist()],
+            pa.string(),
+        )
+    return pc.fill_null(text, "null")
+
+
+def _json_object_text(names: list, texts: list, n: int):
+    """``{"name":value,...}`` per row from per-column JSON text."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not names:
+        return pa.array(["{}"] * n, pa.string())
+    parts: list = []
+    for k, (name, text) in enumerate(zip(names, texts)):
+        parts += [("{" if k == 0 else ",") + json.dumps(name) + ":", text]
+    return pc.binary_join_element_wise(*parts, "}", "")
+
+
+def _json_lines(batch):
+    """One JSON object line per row of an Arrow RecordBatch."""
+    return _json_object_text(
+        batch.schema.names, [_json_value_text(c) for c in batch.columns], batch.num_rows
+    )
+
+
+def _json_chunks(batches, batch_rows: int, max_bytes: int) -> Iterator[list[str]]:
+    """Encode Arrow batches to JSON lines and cut them into appends of at
+    most ``batch_rows`` rows and half the AppendRows limit in UTF-8 bytes
+    (newlines included): a greedy cut, made from the cumulative byte
+    lengths, that stays under the limit instead of splitting on failure.
+    A row over the budget goes alone.  The rows left at the end of a batch
+    carry over into the next one's first append."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    budget = max_bytes // 2  # headroom under the service limit
+    tail = None
+    for batch in batches:
+        lines = _json_lines(batch)
+        if tail is not None:
+            lines = pa.concat_arrays([tail, lines])
+        ends = np.cumsum(pc.binary_length(lines).to_numpy().astype(np.int64) + 1)
+        start = 0
+        while start < len(lines):
+            base = ends[start - 1] if start else 0
+            stop = int(np.searchsorted(ends, base + budget, side="right"))
+            stop = min(max(stop, start + 1), start + batch_rows)
+            if stop == len(lines):
+                break  # may still take rows from the next batch
+            yield _str_list(lines.slice(start, stop - start))
+            start = stop
+        tail = lines.slice(start) if start < len(lines) else None
+    if tail is not None:
+        yield _str_list(tail)
+
+
+def _str_list(lines) -> list[str]:
+    """Arrow JSON lines as Python strings, split out of one joined string
+    (5x cheaper than ``to_pylist``; a JSON line holds no raw newline)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    one = pa.ListArray.from_arrays(pa.array([0, len(lines)], pa.int32()), lines)
+    return pc.binary_join(one, "\n")[0].as_py().split("\n")
 
 
 # ---------------------------------------------------------------------------
@@ -321,16 +491,16 @@ def _arrow_parse_type(dt):
 
 
 def _arrow_read_slice(
-    data_path: str,
+    data: bytes,
     spark_schema: StructType,
     start: int,
     end: int,
     session_tz: str = "UTC",
 ):
-    """Parse the JSON-lines stream file in C++, slice [start, end), and
-    cast to the table's Arrow schema.  A real backend would serve the range
-    directly (a Storage READ API stream); here planning is row-indexed so
-    the parse covers the file and the slice is zero-copy."""
+    """Parse JSON lines in C++, slice lines [start, end), and cast to the
+    table's Arrow schema.  ``data`` is the window of whole appends the
+    backend served for the split (:meth:`FakeBigQuery.read_window`), so
+    the parse covers only those appends and the slice is zero-copy."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.json as pj
@@ -344,7 +514,7 @@ def _arrow_read_slice(
         explicit_schema=parse_schema, unexpected_field_behavior="ignore"
     )
     tbl = pj.read_json(
-        data_path,
+        pa.BufferReader(data),
         read_options=pj.ReadOptions(use_threads=False),
         parse_options=opts,
     ).slice(start, end - start)
@@ -357,8 +527,9 @@ def _arrow_read_slice(
                     # offset-carrying text (JVM to_json) casts directly
                     col = col.cast(f.type)
                 except pa.ArrowInvalid:
-                    # session-local wall-clock text (Python json.dumps):
-                    # parse naive, pin the session zone, then convert
+                    # zone-less wall-clock text (files written before the
+                    # writers stored offsets): parse naive, pin the
+                    # session zone, then convert
                     naive = col.cast(pa.timestamp(f.type.unit))
                     col = pc.assume_timezone(naive, timezone=session_tz).cast(f.type)
             else:
@@ -428,6 +599,15 @@ class _RangeSplit(InputPartition):
 class FakeBigQueryReader(DataSourceReader):
     """Batch reader over (stream, row-range) splits.
 
+    Split count: the ``partitions`` option, when set, is the number of
+    splits, apportioned over the streams by rows (exact for a one-stream
+    table; every non-empty stream gets at least one).  When it is unset
+    the count follows the stored bytes: one split per ``_SPLIT_BYTES``
+    (8 MiB) of visible rows, at least 1 and at most
+    ``_DEFAULT_READ_PARTITIONS`` (8) — like a read session that returns
+    fewer streams than asked for a small table.  Each split parses only
+    the appends that hold its rows.
+
     Filters push down (``pushFilters``); columns do NOT — the Python
     DataSource API has no ``pruneColumns`` hook, so ``read()`` always
     ships ``out_schema``-wide Arrow batches and a post-``load`` select
@@ -440,8 +620,8 @@ class FakeBigQueryReader(DataSourceReader):
         self.root = options["root"]
         self.table = options["table"]
         self.only_visible = str(options.get("only_visible", "true")).lower() == "true"
-        self.num_partitions = int(
-            options.get("partitions", _DEFAULT_READ_PARTITIONS)
+        self.num_partitions = (
+            int(options["partitions"]) if "partitions" in options else None
         )
         self.filters: List[Filter] = []
         self.suffix_filters: List[Filter] = []
@@ -481,40 +661,47 @@ class FakeBigQueryReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         """Plan (table, stream, row-range) splits proportional to stream
-        sizes across every (suffix-pruned) table.
+        sizes across every (suffix-pruned) table; the split count is
+        described on the class.
 
-        Planning reads only stream METADATA (row counts), never data — the
-        driver-side cost is O(#streams) however large the tables are."""
+        Planning reads only stream metadata and append indexes, never
+        data — its cost is O(#streams + #appends) however large the rows
+        are."""
         bq = FakeBigQuery(self.root)
         sizes: list[tuple[str, str, str, int]] = []
+        nbytes = 0
         for table, sfx in self._tables():
             for stream in bq.list_streams(table):
                 info = bq.get_write_stream(table, stream)
                 n = info.flushed if self.only_visible else info.offset
                 if n > 0:
                     sizes.append((table, sfx, stream, n))
+                    if self.num_partitions is None:
+                        nbytes += bq.stored_bytes(table, stream, n)
         total = sum(n for *_, n in sizes)
         if total == 0:
             return [_RangeSplit(DEFAULT_STREAM, 0, 0)]
+        wanted = self.num_partitions or min(
+            _DEFAULT_READ_PARTITIONS, max(1, math.ceil(nbytes / _SPLIT_BYTES))
+        )
         splits: list[_RangeSplit] = []
         for table, sfx, stream, n in sizes:
-            k = max(1, min(n, round(self.num_partitions * n / total)))
-            step = math.ceil(n / k)
-            for s in range(0, n, step):
-                splits.append(
-                    _RangeSplit(
-                        stream, s, min(s + step, n), table=table, suffix=sfx
-                    )
-                )
+            k = max(1, min(n, round(wanted * n / total)))
+            bounds = [i * n // k for i in range(k + 1)]
+            splits.extend(
+                _RangeSplit(stream, lo, hi, table=table, suffix=sfx)
+                for lo, hi in zip(bounds, bounds[1:])
+            )
         return splits
 
     def read(self, partition: _RangeSplit) -> Iterator:
-        """Yield Arrow RecordBatches: parse the stream file with Arrow's
-        C++ JSON-lines reader, slice the partition's row range, evaluate
-        the pushed filters with Arrow compute kernels, and stream the
-        result to the JVM as columnar Arrow — the Python-source analogue
-        of the Storage READ API's Arrow wire format.  Falls back to the
-        row-at-a-time path for types the fast path can't cast."""
+        """Yield Arrow RecordBatches: fetch the appends that hold the
+        partition's rows, parse them with Arrow's C++ JSON-lines reader,
+        slice the partition's row range, evaluate the pushed filters with
+        Arrow compute kernels, and stream the result to the JVM as
+        columnar Arrow — the Python-source analogue of the Storage READ
+        API's Arrow wire format.  Falls back to the row-at-a-time path for
+        types the fast path can't cast."""
         if partition.end <= partition.start:
             return
         table = partition.table or self.table
@@ -524,30 +711,31 @@ class FakeBigQueryReader(DataSourceReader):
             [f for f in self.out_schema.fields if f.name != SUFFIX_COL]
         )
         has_suffix = len(data_schema.fields) != len(self.out_schema.fields)
-        bq = FakeBigQuery(self.root)
-        data_path, _ = bq._stream_paths(table, partition.stream)
         if has_suffix and not data_schema.fields:
             # degenerate projection: ONLY the pseudo-column was selected
             n = partition.end - partition.start
             yield from ((partition.suffix,) for _ in range(n))
             return
+        first, data = FakeBigQuery(self.root).read_window(
+            table, partition.stream, partition.start, partition.end
+        )
         try:
             tbl = _arrow_read_slice(
-                data_path,
+                data,
                 data_schema,
-                partition.start,
-                partition.end,
+                partition.start - first,
+                partition.end - first,
                 self.session_tz,
             )
         except _ArrowFastPathUnsupported:
-            yield from self._read_rows(data_path, partition)
+            yield from self._read_rows(data, first, partition)
             return
         except Exception as e:  # unparseable text for the target type etc.
             import pyarrow as pa
 
             if not isinstance(e, pa.ArrowInvalid):
                 raise
-            yield from self._read_rows(data_path, partition)
+            yield from self._read_rows(data, first, partition)
             return
         for f in self.filters:
             mask = _arrow_mask(f, tbl)
@@ -567,24 +755,24 @@ class FakeBigQueryReader(DataSourceReader):
             tbl = pa.Table.from_arrays(cols, schema=target)
         yield from tbl.to_batches(max_chunksize=_ARROW_BATCH_ROWS)
 
-    def _read_rows(self, data_path: str, partition: _RangeSplit) -> Iterator[Tuple]:
+    def _read_rows(
+        self, data: bytes, first: int, partition: _RangeSplit
+    ) -> Iterator[Tuple]:
+        """Row-at-a-time read of the window's lines; ``first`` is the row
+        offset of its first line."""
         fields = self.out_schema.fields
         filters = self.filters
-        with open(data_path) as f:
-            for i, line in enumerate(f):
-                if i < partition.start:
-                    continue
-                if i >= partition.end:
-                    break
-                raw = json.loads(line)
-                row = {
-                    fld.name: partition.suffix
-                    if fld.name == SUFFIX_COL
-                    else _coerce(raw.get(fld.name), fld.dataType)
-                    for fld in fields
-                }
-                if all(_eval_filter(flt, row) for flt in filters):
-                    yield tuple(row[fld.name] for fld in fields)
+        lines = data.split(b"\n")
+        for line in lines[partition.start - first : partition.end - first]:
+            raw = json.loads(line)
+            row = {
+                fld.name: partition.suffix
+                if fld.name == SUFFIX_COL
+                else _coerce(raw.get(fld.name), fld.dataType)
+                for fld in fields
+            }
+            if all(_eval_filter(flt, row) for flt in filters):
+                yield tuple(row[fld.name] for fld in fields)
 
 
 # ---------------------------------------------------------------------------
@@ -741,14 +929,9 @@ class _AppendResult(WriterCommitMessage):
 
 
 class FakeBigQueryBatchWriter(DataSourceArrowWriter):
-    """r14: an ARROW writer (``DataSourceArrowWriter``) — the row-based
-    ``DataSourceWriter`` shipped every row to the Python worker as a
-    pickled ``Row``, and the transfer alone was the whole write cost
-    (measured at sf0.1: 1.5 s consume-only vs 1.5 s full — serialization
-    and appends were noise).  Arrow batches cross the boundary columnar;
-    rows serialize to the identical JSON strings (same key order, same
-    ``separators``, same ``_json_default`` text forms), so the backend
-    files and the read-back values are unchanged."""
+    """At-least-once default-stream writer over Arrow batches: each task
+    encodes its batches column-wise to JSON lines (:func:`_json_chunks`)
+    and appends them in bounded chunks."""
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
@@ -756,53 +939,6 @@ class FakeBigQueryBatchWriter(DataSourceArrowWriter):
         self.table = options["table"]
         self.batch_rows = int(options.get("batch_rows", _DEFAULT_BATCH_ROWS))
         self.max_bytes = int(options.get("max_append_bytes", 0)) or None
-
-    def _chunk_strings(self, lines: Iterator[str]) -> Iterator[list[str]]:
-        """Count- and byte-bounded chunking: stay under the AppendRows limit
-        proactively instead of splitting reactively.  Rows are serialized
-        exactly once (by the caller); the backend appends the strings
-        verbatim."""
-        bq_limit = self.max_bytes or FakeBigQuery(self.root).max_append_bytes
-        budget = bq_limit // 2  # headroom: JSON size estimate is pre-framing
-        buf: list[str] = []
-        size = 0
-        for s in lines:
-            sz = len(s) + 1
-            if buf and (len(buf) >= self.batch_rows or size + sz > budget):
-                yield buf
-                buf, size = [], 0
-            buf.append(s)
-            size += sz
-        if buf:
-            yield buf
-
-    def _serialize_rows(self, iterator) -> Iterator[str]:
-        """Row-iterator serialization (the pre-r14 path; kept for callers
-        that still hold plain row tuples)."""
-        names = [f.name for f in self.schema.fields]
-        for row in iterator:
-            yield json.dumps(
-                dict(zip(names, row)), separators=(",", ":"), default=_json_default
-            )
-
-    def _serialize_batches(self, batches) -> Iterator[str]:
-        """Arrow RecordBatches -> the same JSON strings ``_serialize_rows``
-        produces: ``to_pylist`` yields one dict per row in schema field
-        order (identical key order to ``dict(zip(names, row))``), and the
-        Python values (int/float/str/datetime/Decimal/list/dict) are the
-        same objects the pickled-Row path carried, so ``json.dumps`` with
-        the same options emits byte-identical lines for every type the
-        writers see."""
-        for batch in batches:
-            for d in batch.to_pylist():
-                yield json.dumps(
-                    d, separators=(",", ":"), default=_json_default
-                )
-
-    def _chunks(self, iterator) -> Iterator[list[str]]:
-        """Backward-compatible row-iterator chunking (stream-writer reuse
-        and tests)."""
-        yield from self._chunk_strings(self._serialize_rows(iterator))
 
     def write(self, iterator) -> _AppendResult:
         """Chunked appends through the full retry state machine (A12-A14:
@@ -813,7 +949,8 @@ class FakeBigQueryBatchWriter(DataSourceArrowWriter):
         stream = default_stream_name(self.table)
         settings = WriterSettings()
         rows = appends = 0
-        for chunk in self._chunk_strings(self._serialize_batches(iterator)):
+        max_bytes = self.max_bytes or bq.max_append_bytes
+        for chunk in _json_chunks(iterator, self.batch_rows, max_bytes):
             rows += write_with_retry(bq, self.table, stream, chunk, -1, settings)
             appends += 1
         return _AppendResult(rows=rows, appends=appends)
@@ -840,10 +977,10 @@ class _BufferedResult(WriterCommitMessage):
 
 
 class FakeBigQueryStreamWriter(DataSourceStreamArrowWriter):
-    """r14: Arrow variant (``DataSourceStreamArrowWriter``) for the same
-    reason as :class:`FakeBigQueryBatchWriter` — the pickled-Row transfer
-    WAS the write cost; the 2PC protocol (fresh buffered stream per task,
-    offset-checked appends, commit-time flush) is unchanged."""
+    """Exactly-once writer over Arrow batches: the 2PC protocol (fresh
+    buffered stream per task, offset-checked appends, commit-time flush)
+    with the same encoder and chunking as
+    :class:`FakeBigQueryBatchWriter`."""
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
@@ -861,12 +998,9 @@ class FakeBigQueryStreamWriter(DataSourceStreamArrowWriter):
             self.table, "BUFFERED",
             name=f"{self.table}/streams/ep_{uuid.uuid4().hex[:16]}",
         )
-        writer = FakeBigQueryBatchWriter.__new__(FakeBigQueryBatchWriter)
-        writer.schema, writer.root, writer.table = self.schema, self.root, self.table
-        writer.batch_rows, writer.max_bytes = self.batch_rows, None
         settings = WriterSettings()
         offset = 0
-        for chunk in writer._chunk_strings(writer._serialize_batches(iterator)):
+        for chunk in _json_chunks(iterator, self.batch_rows, bq.max_append_bytes):
             offset += write_with_retry(
                 bq, self.table, stream, chunk, offset, settings
             )
@@ -902,8 +1036,10 @@ class FakeBigQueryStreamWriter(DataSourceStreamArrowWriter):
 class FakeBigQueryDataSource(DataSource):
     """``spark.read.format("fakebigquery").option("root", ...).option("table", ...)``.
 
-    Options: ``root`` (backend directory), ``table``, ``partitions`` (read
-    parallelism), ``only_visible`` (read uncommitted rows when false),
+    Options: ``root`` (backend directory), ``table``, ``partitions`` (the
+    exact read split count; unset, it is sized by stored bytes, one split
+    per 8 MiB up to 8 — see :class:`FakeBigQueryReader`), ``only_visible``
+    (read uncommitted rows when false),
     ``fields`` (comma-separated server-side field list, below),
     ``batch_rows`` / ``max_append_bytes`` (writer chunking).
 

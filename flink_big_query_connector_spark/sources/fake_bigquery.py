@@ -14,9 +14,18 @@ durability semantics across query restarts.
 
 Layout under ``root``::
 
-    tables/<table>/streams/<stream>.jsonl   # one JSON row per line
-    tables/<table>/streams/<stream>.meta    # {"type","offset","flushed","finalized"}
-    script.json                             # scripted failures / stream names
+    tables/<table>/streams/<stream>.jsonl      # one JSON row per line (UTF-8)
+    tables/<table>/streams/<stream>.jsonl.idx  # "<first row> <byte offset>" per append
+    tables/<table>/streams/<stream>.meta       # {"type","offset","flushed","finalized"}
+    script.json                                # scripted failures / stream names
+
+The ``.idx`` sidecar is append-only: each append records the row offset
+of its first row and the byte offset where its lines start, under the
+stream lock and before the data and the meta offset are written.  Readers
+use it to fetch just the bytes of the appends that hold a row range
+(:meth:`FakeBigQuery.read_window`), the way a Storage READ API stream
+serves one range of a table.  A stream with no index (written before the
+sidecar existed) is read whole.
 """
 
 from __future__ import annotations
@@ -25,6 +34,7 @@ import fcntl
 import json
 import os
 import uuid
+from bisect import bisect_left, bisect_right
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -94,6 +104,9 @@ class FakeBigQuery:
     def _lock_path(self, table: str, stream: str) -> str:
         return self._stream_paths(table, stream)[0] + ".lock"
 
+    def _index_path(self, table: str, stream: str) -> str:
+        return self._stream_paths(table, stream)[0] + ".idx"
+
     # -- scripted failures -------------------------------------------------
     # Mirrors MockJsonClientProvider's settable futures: the test scripts
     # "fail the next N appends with status S" and the writer under test must
@@ -104,7 +117,12 @@ class FakeBigQuery:
     def script_append_failures(
         self, statuses: list[str], message: str = "", table: str = "*"
     ) -> None:
-        """Queue failures: each append pops one status (FIFO); "OK" passes."""
+        """Queue failures: each append pops one status (FIFO); "OK" passes.
+
+        Script failures BEFORE starting the appends they target.  Appends
+        look for the script file without taking its lock (the fast path
+        in ``_pop_scripted_failure``), so a failure scripted while an
+        append is already in flight may miss that append."""
         with _locked(self._script_path() + ".lock"):
             script = self._read_script()
             script.setdefault("append_failures", []).extend(
@@ -216,14 +234,15 @@ class FakeBigQuery:
         if scripted is not None:
             self._raise_scripted(scripted, stream)
 
-        # str entries arrive pre-serialized (JVM-side to_json, A17)
+        # str entries arrive pre-serialized (JVM-side to_json, A17); the
+        # limit is on the UTF-8 bytes sent, newlines included
         payload = [
             r if isinstance(r, str) else json.dumps(r, sort_keys=True, default=str)
             for r in rows
         ]
-        size = sum(len(p) + 1 for p in payload)
-        if size > self.max_append_bytes:
-            raise MessageTooLargeError(size, self.max_append_bytes)
+        blob = ("\n".join(payload) + "\n").encode("utf-8") if payload else b""
+        if len(blob) > self.max_append_bytes:
+            raise MessageTooLargeError(len(blob), self.max_append_bytes)
 
         if stream == DEFAULT_STREAM or stream.endswith("/" + DEFAULT_STREAM):
             self._init_stream(table, stream, "DEFAULT")
@@ -249,9 +268,13 @@ class FakeBigQuery:
                     raise OffsetAlreadyExistsError(offset, current)
                 if offset > current:
                     raise OffsetOutOfRangeError(offset, current)
-            with open(data, "a") as f:
-                for p in payload:
-                    f.write(p + "\n")
+            if blob:
+                with open(data, "ab") as f:
+                    # index entry first: a reader that bounds a window by
+                    # the next entry never sees this append half-written
+                    with open(self._index_path(table, stream), "a") as idx:
+                        idx.write(f"{current} {f.tell()}\n")
+                    f.write(blob)
             m["offset"] = current + len(rows)
             if m["type"] == "DEFAULT":
                 m["flushed"] = m["offset"]  # default streams are immediately visible
@@ -284,7 +307,50 @@ class FakeBigQuery:
             self._write_meta(meta, m)
             return m["flushed"]
 
-    # -- reads (for assertions / the sink-table oracle) ---------------------
+    # -- reads ----------------------------------------------------------------
+    def _append_index(self, table: str, stream: str) -> tuple[list, list]:
+        """(first row, byte offset) of every append, in append order."""
+        rows: list[int] = []
+        offsets: list[int] = []
+        try:
+            with open(self._index_path(table, stream)) as f:
+                for line in f:
+                    r, b = line.split()
+                    rows.append(int(r))
+                    offsets.append(int(b))
+        except FileNotFoundError:
+            pass
+        return rows, offsets
+
+    def read_window(
+        self, table: str, stream: str, start: int, end: int
+    ) -> tuple[int, bytes]:
+        """The stored lines of the appends that hold rows ``[start, end)``,
+        and the row offset of the first line returned.
+
+        The window starts at the last append beginning at or before
+        ``start`` and stops at the first append beginning at or after
+        ``end``, so no other append's bytes are read.  A stream without an
+        index is returned whole, starting at row 0."""
+        data, _ = self._stream_paths(table, stream)
+        rows, offsets = self._append_index(table, stream)
+        i = bisect_right(rows, start) - 1
+        first, lo = (rows[i], offsets[i]) if i >= 0 else (0, 0)
+        j = bisect_left(rows, end)
+        with open(data, "rb") as f:
+            f.seek(lo)
+            return first, f.read(offsets[j] - lo) if j < len(rows) else f.read()
+
+    def stored_bytes(self, table: str, stream: str, rows: int) -> int:
+        """Bytes stored for the first ``rows`` rows of a stream, counted to
+        the end of the append that holds the last of them (the whole file
+        for a stream without an index)."""
+        idx_rows, offsets = self._append_index(table, stream)
+        j = bisect_left(idx_rows, rows)
+        if j < len(idx_rows):
+            return offsets[j]
+        return os.path.getsize(self._stream_paths(table, stream)[0])
+
     def read_rows(self, table: str, only_visible: bool = True) -> list[dict]:
         """All rows in the table across streams (visible rows only by default)."""
         out: list[dict] = []
@@ -297,7 +363,7 @@ class FakeBigQuery:
             meta = self._read_meta(os.path.join(streams_dir, fn))
             data_path = os.path.join(streams_dir, fn[:-5] + ".jsonl")
             limit = meta["flushed"] if only_visible else meta["offset"]
-            with open(data_path) as f:
+            with open(data_path, "rb") as f:
                 for i, line in enumerate(f):
                     if i >= limit:
                         break

@@ -38,11 +38,13 @@ from .config import BatchTriggerSettings
 
 
 def json_size_of(row) -> int:
-    """Byte size of a row as serialized (the ``BigQueryRecord.getSize()``
-    analogue; newline included to match the backend's accounting).  A str
-    row is already serialized (JVM-side ``to_json``, A17)."""
+    """UTF-8 byte size of a row as serialized (the
+    ``BigQueryRecord.getSize()`` analogue; newline included to match the
+    backend's accounting).  A str row is already serialized (JVM-side
+    ``to_json``, A17, which emits non-ASCII text unescaped); a dict is
+    serialized as the backend does, ASCII-escaped."""
     if isinstance(row, str):
-        return len(row) + 1
+        return len(row.encode("utf-8")) + 1
     return len(json.dumps(row, sort_keys=True, default=str)) + 1
 
 

@@ -149,13 +149,14 @@ def write_with_retry(
     while True:
         try:
             client.append(table, stream, rows, offset)
+            if metrics is not None or stream_metrics is not None:
+                nbytes = sum(json_size_of(r) for r in rows)
             if metrics is not None:
                 metrics.add("batch_count")
                 metrics.add("append_rows", len(rows))
+                metrics.add("append_bytes", nbytes)
             if stream_metrics is not None:
-                stream_metrics.record_append(
-                    len(rows), sum(json_size_of(r) for r in rows), offset
-                )
+                stream_metrics.record_append(len(rows), nbytes, offset)
             return len(rows)
         except MessageTooLargeError:
             # Oversized: split in half recursively, preserving offsets

@@ -109,3 +109,43 @@ def test_cross_handle_durability(tmp_path):
     root = str(tmp_path / "bq")
     FakeBigQuery(root).append("t1", DEFAULT_STREAM, rows(2))
     assert FakeBigQuery(root).table_count("t1") == 2
+
+
+def test_message_size_limit_counts_utf8_bytes(tmp_path):
+    """Two rows of 2-byte characters: 88 characters, under a 100-byte
+    limit, but 158 UTF-8 bytes, over it.  The append is refused, and the
+    retry machine splits it into two appends that land."""
+    from flink_big_query_connector_spark.streaming.batching import json_size_of
+    from flink_big_query_connector_spark.streaming.config import WriterSettings
+    from flink_big_query_connector_spark.streaming.sinks import write_with_retry
+
+    bq = FakeBigQuery(str(tmp_path / "bq"), max_append_bytes=100)
+    payload = ['{"s":"' + "é" * 35 + '"}'] * 2
+    assert sum(len(p) + 1 for p in payload) < 100
+    assert sum(json_size_of(p) for p in payload) == 158
+    with pytest.raises(MessageTooLargeError):
+        bq.append("t1", DEFAULT_STREAM, payload)
+    assert bq.table_count("t1") == 0
+    assert write_with_retry(bq, "t1", DEFAULT_STREAM, payload, -1, WriterSettings()) == 2
+    assert bq.read_rows("t1") == [{"s": "é" * 35}] * 2
+    assert len(bq._append_index("t1", DEFAULT_STREAM)[0]) == 2
+
+
+def test_append_index_records_first_row_and_byte_offset(bq):
+    """One ``<first row> <byte offset>`` entry per append; windows hold
+    exactly the appends that cover a row range."""
+    s = bq.create_write_stream("t1", "BUFFERED")
+    bq.append("t1", s, rows(3), 0)
+    bq.append("t1", s, [], 3)  # an empty append stores nothing
+    bq.append("t1", s, rows(2, 3), 3)
+    bq.append("t1", s, rows(4, 5), 5)
+    first_rows, offsets = bq._append_index("t1", s)
+    assert first_rows == [0, 3, 5]
+    line = len('{"value": 0}\n')
+    assert offsets == [0, 3 * line, 5 * line]
+    assert bq.read_window("t1", s, 3, 5) == (3, b'{"value": 3}\n{"value": 4}\n')
+    first, data = bq.read_window("t1", s, 4, 6)
+    assert first == 3 and data.count(b"\n") == 6
+    assert bq.stored_bytes("t1", s, 3) == 3 * line
+    assert bq.stored_bytes("t1", s, 4) == 5 * line
+    assert bq.stored_bytes("t1", s, 9) == 9 * line

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 import tempfile
 
 import pytest
@@ -60,6 +61,28 @@ def test_sink_metrics_count_retries_and_splits(spark, bq):
         bq, "p.d.t2", DEFAULT_STREAM, big, -1, WriterSettings(), metrics=metrics
     )
     assert metrics.snapshot()["split_batch_count"] >= 1
+
+
+def test_sink_metrics_count_append_bytes(spark, bq):
+    """append_bytes adds the UTF-8 bytes (newlines included) of every
+    append that landed — the bytes the backend stored — and feeds the
+    same figure to the per-stream gauge."""
+    from flink_big_query_connector_spark.streaming.metrics import StreamMetrics
+
+    metrics = SinkMetrics.create(spark)
+    gauge = StreamMetrics("p.d.t", DEFAULT_STREAM)
+    rows = [json.dumps({"value": i, "s": "é" * i}, ensure_ascii=False) for i in range(10)]
+    bq.script_append_failures(["UNAVAILABLE"], table="p.d.t")
+    write_with_retry(
+        bq, "p.d.t", DEFAULT_STREAM, rows, -1, WriterSettings(),
+        sleep=lambda s: None, metrics=metrics, stream_metrics=gauge,
+    )
+    stored = sum(len(r.encode("utf-8")) + 1 for r in rows)
+    assert metrics.snapshot()["append_bytes"] == stored
+    assert metrics.snapshot()["retry_count"] == 1
+    assert gauge.snapshot()["batch_size_mb"] == stored / 1_000_000.0
+    stream_file = bq._stream_paths("p.d.t", DEFAULT_STREAM)[0]
+    assert os.path.getsize(stream_file) == stored
 
 
 def test_observed_metrics_via_listener(spark, tmp_path):

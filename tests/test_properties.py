@@ -159,7 +159,6 @@ def test_bq_schema_round_trip_preserves_structure(fields):
 # connector serialization round-trip (Arrow fast path + row fallback)
 # ---------------------------------------------------------------------------
 
-import json
 import math
 import shutil
 import tempfile
@@ -182,7 +181,7 @@ _RT_SCHEMA = StructType(
 
 
 def _roundtrip_rows(rows):
-    """Serialize like FakeBigQueryBatchWriter._chunks, append to the
+    """Encode with the DSv2 writers' column encoder, append to the
     backend, read back through FakeBigQueryReader.read (Arrow fast path
     with automatic row fallback for NaN/Inf tokens)."""
     from flink_big_query_connector_spark.sources import bq_datasource as dsrc
@@ -195,10 +194,15 @@ def _roundtrip_rows(rows):
     try:
         bq = FakeBigQuery(root)
         table = "p/d/t"
-        payload = [
-            json.dumps(r, separators=(",", ":"), default=dsrc._json_default)
-            for r in rows
-        ]
+        import pyarrow as pa
+
+        batch = pa.RecordBatch.from_pylist(
+            rows,
+            schema=pa.schema(
+                [("id", pa.int64()), ("name", pa.string()), ("score", pa.float64())]
+            ),
+        )
+        payload = dsrc._json_lines(batch).to_pylist()
         bq.append(table, default_stream_name(table), payload, offset=-1)
         reader = dsrc.FakeBigQueryReader.__new__(dsrc.FakeBigQueryReader)
         reader.out_schema = _RT_SCHEMA

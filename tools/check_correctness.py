@@ -15,10 +15,12 @@ import sys
 import time
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from flink_big_query_connector_spark import plans  # noqa: E402
 from flink_big_query_connector_spark.cache import release_caches  # noqa: E402

@@ -10,8 +10,10 @@ from __future__ import annotations
 import io
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from flink_big_query_connector_spark import plans  # noqa: E402
 from flink_big_query_connector_spark.cache import release_caches  # noqa: E402
@@ -102,7 +104,7 @@ def main() -> None:
             body.append(line[:157] + "..." if len(line) > 160 else line)
         out += [f"## {name}", "", f"_{why}_", "", "```",
                 "\n".join(body), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote PLANS.md")
     spark.stop()

@@ -10,8 +10,10 @@ exchanges, and the absence of unexpected Exchange nodes.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from flink_big_query_connector_spark import plans  # noqa: E402
 from flink_big_query_connector_spark.session import get_spark  # noqa: E402

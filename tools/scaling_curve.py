@@ -30,8 +30,10 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from flink_big_query_connector_spark import plans  # noqa: E402
 from flink_big_query_connector_spark.cache import release_caches  # noqa: E402
