@@ -1084,12 +1084,13 @@ def connected_components(
     # compile the upstream plan twice), so the funnel deepens with the
     # cluster, not with a constant tuned for local mode.
     n = pairs_df.sparkSession.sparkContext.defaultParallelism
-    while n > 1:
-        n = 1 if n <= CC_MERGE_FAN else (n + CC_MERGE_FAN - 1) // CC_MERGE_FAN
-        if n == 1:
-            out = out.repartition(1).mapInPandas(stars, "u long, v long")
-        else:
-            out = out.repartition(n, "u").mapInPandas(stars, "u long, v long")
+    while n > CC_MERGE_FAN:
+        n = (n + CC_MERGE_FAN - 1) // CC_MERGE_FAN
+        out = out.repartition(n, "u").mapInPandas(stars, "u long, v long")
+    # The global pass runs whatever the parallelism: the pair graph's
+    # partition count does not follow it (one slot still scans several
+    # files), and only this pass joins components split across them.
+    out = out.repartition(1).mapInPandas(stars, "u long, v long")
     return scoped_persist(
         out.select(
             F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")

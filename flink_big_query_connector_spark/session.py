@@ -11,9 +11,15 @@ import os
 import tempfile
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _SHIPPED_SESSIONS: set[int] = set()
+
+# The Python daemon get_spark hands to Spark (``spark.python.daemon.module``)
+# and the directory that holds it, put on the workers' PYTHONPATH.
+DAEMON_MODULE = "fbqcs_daemon"
+_WORKER_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_path")
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -66,12 +72,54 @@ def default_shuffle_partitions(cpus: int | str) -> int:
         return 256
 
 
+def _daemon_conf() -> dict:
+    """``spark.python.daemon.module`` = :data:`DAEMON_MODULE`, when the JVM
+    that starts the Python workers can import it; otherwise nothing.
+
+    Worker interpreters take PYTHONPATH from the JVM's environment, which
+    is the driver's at JVM launch.  So the module's directory joins
+    PYTHONPATH here, before the launch, and a JVM that is already running
+    (a stopped session's, or spark-submit's) must show it in its own
+    environment."""
+    pp = os.environ.get("PYTHONPATH", "")
+    if _WORKER_PATH not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = f"{pp}{os.pathsep}{_WORKER_PATH}" if pp else _WORKER_PATH
+    jvm = SparkContext._jvm
+    if jvm is None:
+        if "PYSPARK_GATEWAY_PORT" in os.environ:  # launched by spark-submit
+            return {}
+    elif _WORKER_PATH not in (jvm.java.lang.System.getenv("PYTHONPATH") or "").split(os.pathsep):
+        return {}
+    return {"spark.python.daemon.module": DAEMON_MODULE}
+
+
 def get_spark(
     app_name: str = "flink-big-query-connector-spark",
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A ``local[cpus]`` session with the engine's defaults; ``extra_conf``
+    is applied last and wins.
+
+    Python workers start from :data:`DAEMON_MODULE`
+    (``_worker_path/fbqcs_daemon.py``) rather than ``pyspark.daemon``.
+    Spark puts its bundled ``pyspark.zip``, py4j zip and spark-core jar
+    first on every worker's path, and each task's
+    ``importlib.invalidate_caches()`` then re-reads all of their zip
+    directories: ~150 ms per Python task on Python 3.11.  The module
+    drops those archives from the path when the interpreter can import
+    ``py4j`` and the same pyspark version from installed directories,
+    then runs ``pyspark.daemon`` unchanged; with no matching install it
+    leaves the path as Spark set it, so workers start exactly as before.
+    ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``
+    restores Spark's default.  The daemon module is a static conf, so
+    this applies only to sessions get_spark builds: ``tune_session``
+    cannot set it on a session someone else started.  Spark starts the
+    DataSource planner's Python processes (``schema``, ``partitions``,
+    ``writer``, ``commit``) with a hard-coded ``pyspark.daemon``; those
+    keep the zip import.
+    """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get(
@@ -86,6 +134,7 @@ def get_spark(
     from .compat import enable_bundled_protobuf
 
     enable_bundled_protobuf()
+    conf = _daemon_conf()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -118,7 +167,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

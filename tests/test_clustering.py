@@ -119,3 +119,19 @@ def test_lsh_neardup_pairs_subset_of_exact_with_recall(spark):
         hi_found = {p for p in lsh if p[2] >= 0.7}
         assert len(hi_found) >= 0.5 * len(hi_exact), (
             len(hi_found), len(hi_exact))
+
+
+def test_single_slot_still_merges_across_partitions(spark, monkeypatch):
+    """With one slot (``local[1]``, defaultParallelism 1) the funnel
+    still runs its global pass: the pair graph's partition count does not
+    follow the slot count, and a chain whose edges sit in several input
+    partitions gets one label only once the levels meet in one task."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: 1))
+    edges = [(i, i + 1) for i in range(40)]
+    rdd = spark.sparkContext.parallelize(edges, 4)
+    df = spark.createDataFrame(rdd, "id_a long, id_b long")
+    assert df.rdd.getNumPartitions() >= 2
+    got = {r.doc_id: r.cluster_id for r in connected_components(df).collect()}
+    assert got == _cc_reference(edges)

@@ -308,3 +308,40 @@ def test_no_unpartitioned_window_orderby_outside_allowlist():
         f"{_GLOBAL_WINDOW_ALLOWLIST} — update the map ONLY with a "
         "documented bounded/canonical justification"
     )
+
+
+def test_worker_daemon_imports_only_stdlib_before_path_rewrite():
+    """``_worker_path/fbqcs_daemon.py`` drops Spark's archives from the
+    worker's path; any import of pyspark, py4j or this package above that
+    rewrite would load it from the archives first and bring the per-task
+    zip-cache cost back.  Imports above the ``sys.path[:] =`` line must be
+    absolute standard-library ones, ``pyspark.daemon`` must run after it,
+    and the directory must stay a plain one (an ``__init__.py`` would make
+    ``-m`` import the package)."""
+    import ast
+    import sys
+
+    worker_path = PKG / "_worker_path"
+    src = (worker_path / "fbqcs_daemon.py").read_text()
+    assert not (worker_path / "__init__.py").exists()
+    lines = src.splitlines()
+    rewrite = next(i for i, line in enumerate(lines, 1)
+                   if line.strip().startswith("sys.path[:] ="))
+    run = next(i for i, line in enumerate(lines, 1)
+               if "run_module(\"pyspark.daemon\"" in line)
+    assert run > rewrite
+    offenders = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [node.module or ""] if node.level == 0 else ["."]
+        else:
+            continue
+        if node.lineno > rewrite:
+            continue
+        for name in names:
+            top = name.split(".")[0]
+            if top != "__future__" and top not in sys.stdlib_module_names:
+                offenders.append(f"line {node.lineno}: {name}")
+    assert not offenders, offenders
